@@ -127,13 +127,9 @@ def test_token_sort_sees_trailing_space_dup(spark, tmp_path):
     assert rows[0] == (2, True) and rows[6] == (2, False)
 
 
-def test_changepoint_ref_q_negative_sum_parity(spark, tmp_path):
-    # ADVICE r9 A2: a series whose cents sum is NEGATIVE must still
-    # gate exact — both engines truncate integer division toward
-    # zero (Spark `div`; DuckDB 1.x integer `//`).
+def _write_events(tmp_path, types, values):
     import datetime as dt
 
-    values = [-7.13, -3.01, -12.5, -0.01, -5.25, -9.99] * 10
     n = len(values)
     base = dt.datetime(2024, 1, 1)
     tbl = pa.table(
@@ -144,14 +140,39 @@ def test_changepoint_ref_q_negative_sum_parity(spark, tmp_path):
                 pa.timestamp("us"),
             ),
             "user_id": pa.array([1] * n, pa.int64()),
-            "event_type": pa.array(["neg"] * n),
+            "event_type": pa.array(types, pa.string()),
             "value": pa.array(values, pa.float64()),
             "props": pa.array(["{}"] * n),
         }
     )
     pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+def test_changepoint_ref_q_negative_sum_parity(spark, tmp_path):
+    # ADVICE r9 A2: a series whose cents sum is NEGATIVE must still
+    # gate exact — both engines truncate integer division toward
+    # zero (Spark `div`; DuckDB 1.x integer `//`).
+    values = [-7.13, -3.01, -12.5, -0.01, -5.25, -9.99] * 10
+    sf = _write_events(tmp_path, ["neg"] * len(values), values)
     _assert_matches_oracle(
-        spark, "strm_changepoint_monitor", str(tmp_path), tables=("events",)
+        spark, "strm_changepoint_monitor", sf, tables=("events",)
+    )
+
+
+def test_changepoint_skips_null_event_type(spark, tmp_path):
+    # A NULL event_type in the standing slice must not enter the
+    # per-type reference (sorted() over a None key raised TypeError,
+    # and `== NULL` never matches): its rows drop out of the output
+    # exactly as the oracle's inner join drops them.
+    values = [1.25, 3.5, 2.0, 7.75, 4.5] * 12
+    types = [("a", "b", None)[i % 3] for i in range(len(values))]
+    assert any(t is None for i, t in enumerate(types) if i % 10)
+    sf = _write_events(tmp_path, types, values)
+    rows = QUERIES["strm_changepoint_monitor"](spark, sf).collect()
+    assert rows and all(r["event_type"] in ("a", "b") for r in rows)
+    _assert_matches_oracle(
+        spark, "strm_changepoint_monitor", sf, tables=("events",)
     )
 
 

@@ -1,6 +1,6 @@
 """Regression tests for the r11 ADVICE findings closed in r12.
 
-A1 similarity._codebook_store_path: a resolvable corpus dir WITHOUT
+A1 stores.codebook_path: a resolvable corpus dir WITHOUT
    an embeddings table must return None (in-run training fallback),
    not propagate corpus_fingerprint's FileNotFoundError — with
    SPARK_GRAFT_SIG_STORE set, a training call that worked without
@@ -24,18 +24,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from wsprnet_scraper_spark.operators import stores
-from wsprnet_scraper_spark.operators.similarity import _codebook_store_path
 
 
 def test_codebook_store_path_missing_embeddings_returns_none(
     tmp_path, monkeypatch
 ):
-    monkeypatch.setenv("SPARK_GRAFT_SIG_STORE", str(tmp_path / "store"))
+    monkeypatch.setenv(stores.ENV_VAR, str(tmp_path / "store"))
     corpus = tmp_path / "corpus"  # resolvable dir, no embeddings table
     corpus.mkdir()
-    assert _codebook_store_path(str(corpus), (8, 2)) is None
+    assert stores.codebook_path(str(corpus), (8, 2)) is None
     # and a non-existent dir still returns None (pre-existing contract)
-    assert _codebook_store_path(str(tmp_path / "nope"), (8, 2)) is None
+    assert stores.codebook_path(str(tmp_path / "nope"), (8, 2)) is None
 
 
 def _mk_corpus(tmp_path, name="c"):

@@ -12,8 +12,8 @@ silently again:
   queries end-to-end.
 * test_load_events_ntz_backstop proves load_events normalizes ts even
   when the session conf is wrong (inferTimestampNTZ left on).
-* test_tune_keeps_load_bearing_confs pins the conf keys _tune must
-  never lose.
+* test_tune_keeps_load_bearing_confs pins that _tune applies the
+  engine session's conf set and the keys it must never lose.
 """
 
 from __future__ import annotations
@@ -75,10 +75,20 @@ def test_load_events_ntz_backstop(spark):
 
 
 def test_tune_keeps_load_bearing_confs():
-    import __spark_entry__ as entry_mod
-    import inspect
+    # _tune applies the engine session's own SQL conf set (one dict in
+    # session.py), so a conf added to the builder reaches the driver's
+    # session too; the load-bearing keys must stay in it.
+    import types
 
-    src = inspect.getsource(entry_mod._tune)
+    import __spark_entry__ as entry_mod
+    from wsprnet_scraper_spark.session import sql_conf
+
+    applied = {}
+    fake = types.SimpleNamespace(
+        conf=types.SimpleNamespace(set=lambda k, v: applied.__setitem__(k, v))
+    )
+    entry_mod._tune(fake)
+    assert applied == sql_conf()
     for key in (
         "spark.sql.session.timeZone",
         "spark.sql.ansi.enabled",
@@ -86,4 +96,4 @@ def test_tune_keeps_load_bearing_confs():
         "spark.sql.parquet.inferTimestampNTZ.enabled",
         "spark.sql.adaptive.enabled",
     ):
-        assert key in src, f"_tune() lost load-bearing conf {key}"
+        assert key in applied, f"_tune() lost load-bearing conf {key}"

@@ -1,12 +1,12 @@
-"""The shared materialized edge front door (r5 verdict #1) and the
-bucketed HITS twin (r5 verdict #2).
+"""The shared edge relations (r5 verdict #1) and the bucketed HITS
+twin (r5 verdict #2).
 
-Every graph_* plan reads its edge relation through
-plans.graph_q._materialized_edges, which writes the derived relation
-to a write-once scratch parquet ONCE per (application, sf_dir,
-derivation) and hands every later caller a plain scan of the written
-files — the in-session form of the 100 TB pattern (materialize the
-edge relation once, run every graph workload against it). These tests pin that the
+Every graph_* plan reads its edge relation through the standing-state
+store (operators/stores.py), which writes the derived relation to a
+write-once parquet ONCE per (application, sf_dir, derivation) and
+hands every later caller a plain scan of the written files — the
+in-session form of the 100 TB pattern (materialize the edge relation
+once, run every graph workload against it). These tests pin that the
 amortization is real (one build per key, identity-stable returns,
 survives spark.catalog.clearCache()), that the cache keys distinguish
 what must be distinguished, and that the SHUFFLE_HASH HITS twin is
@@ -18,27 +18,28 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from wsprnet_scraper_spark.operators import stores
 from wsprnet_scraper_spark.plans import QUERIES, graph_q
 
 
 def _fresh(spark):
-    graph_q.clear_edge_cache()
+    stores.clear_store_cache(drop_files=True)
     spark.catalog.clearCache()
 
 
 def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
     _fresh(spark)
     builds = []
-    orig = graph_q._materialized_edges
+    orig = stores.materialized
 
-    def counting(sp, sf_dir, kind, build):
+    def counting(sp, sf_dir, kind, build, tables=("documents",)):
         def counted_build():
             builds.append(kind)
             return build()
 
-        return orig(sp, sf_dir, kind, counted_build)
+        return orig(sp, sf_dir, kind, counted_build, tables)
 
-    monkeypatch.setattr(graph_q, "_materialized_edges", counting)
+    monkeypatch.setattr(stores, "materialized", counting)
     try:
         e1 = graph_q._edges(spark, SF_SMOKE)
         e2 = graph_q._edges(spark, SF_SMOKE)
@@ -47,7 +48,9 @@ def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
         p1 = graph_q._copurchase_pairs(spark, SF_SMOKE)
         # one build per derivation, no matter how many callers
         assert builds == [
-            "full_directed", "sliced_directed", "copurchase_pairs"
+            "edges_full_directed",
+            "edges_sliced_directed",
+            "edges_copurchase_pairs",
         ]
         # the sliced relation is the SAME materialized DataFrame object
         assert s1 is s2
@@ -56,7 +59,7 @@ def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
         assert e1.count() == e2.count() > 0
         assert p1.columns == ["a", "b"]
     finally:
-        graph_q.clear_edge_cache()
+        stores.clear_store_cache(drop_files=True)
 
 
 def test_materialization_survives_clearCache(spark):
@@ -77,20 +80,20 @@ def test_materialization_survives_clearCache(spark):
         plan = e2._jdf.queryExecution().simpleString()
         assert "parquet" in plan.lower() and "Join" not in plan
     finally:
-        graph_q.clear_edge_cache()
+        stores.clear_store_cache(drop_files=True)
 
 
-def test_clear_edge_cache_releases_and_rebuilds(spark):
+def test_file_dropping_clear_releases_and_rebuilds(spark):
     _fresh(spark)
     try:
         e1 = graph_q._sliced_edges(spark, SF_SMOKE)
         rows1 = sorted(map(tuple, e1.collect()))
-        graph_q.clear_edge_cache()  # deletes the backing files too
+        stores.clear_store_cache(drop_files=True)  # deletes the files too
         e2 = graph_q._sliced_edges(spark, SF_SMOKE)
         assert e1 is not e2
         assert sorted(map(tuple, e2.collect())) == rows1
     finally:
-        graph_q.clear_edge_cache()
+        stores.clear_store_cache(drop_files=True)
 
 
 def test_hits_bucketed_bit_identical_and_no_broadcast(spark):
@@ -101,7 +104,7 @@ def test_hits_bucketed_bit_identical_and_no_broadcast(spark):
         bucketed = QUERIES["graph_hits_bucketed"](spark, SF_SMOKE)
         krows = sorted(map(tuple, bucketed.collect()))
     finally:
-        graph_q.clear_edge_cache()
+        stores.clear_store_cache(drop_files=True)
     assert brows == krows and len(brows) > 0
     # the twin shares graph_hits's oracle registration
     from wsprnet_scraper_spark.plans import ORACLE

@@ -124,10 +124,12 @@ def test_codebook_store_serves_fresh_session(spark, tmp_path, monkeypatch):
         emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
     )
     c1, f1 = _rows(coarse1), _rows(fine1)
-    spath = similarity._codebook_store_path(
-        ckey, ("twolevel_df", 2, 2, 1, 4)
-    )
+    spath = stores.codebook_path(ckey, ("twolevel_df", 2, 2, 1, 4))
+    # both relations landed together under one complete entry
+    assert os.path.isfile(os.path.join(spath, "_SUCCESS"))
     assert os.path.isfile(os.path.join(spath, "coarse", "_SUCCESS"))
+    assert os.path.isfile(os.path.join(spath, "fine", "_SUCCESS"))
+    assert [p for p in os.listdir(os.path.dirname(spath)) if "wip" in p] == []
     similarity.clear_codebooks()
     # poison the underlying trainer: a store hit must not retrain
     monkeypatch.setattr(
@@ -139,6 +141,33 @@ def test_codebook_store_serves_fresh_session(spark, tmp_path, monkeypatch):
     )
     assert _rows(coarse2) == c1 and _rows(fine2) == f1
     stores.clear_store_cache()
+
+
+def test_codebook_store_replaces_stale_partial_entry(
+    spark, tmp_path, monkeypatch
+):
+    # A crashed session's partial codebook entry (no _SUCCESS) must be
+    # replaced through the same temp-dir-and-rename landing as every
+    # other store entry, never written over in place.
+    monkeypatch.setenv(stores.ENV_VAR, str(tmp_path / "store"))
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    ckey = f"{SF_SMOKE}:t_cbk_stale"
+    spath = stores.codebook_path(ckey, ("kmeans_df", 2, 1))
+    os.makedirs(spath)
+    with open(os.path.join(spath, "junk"), "w") as f:
+        f.write("partial")
+    similarity.clear_codebooks()
+    cents = _rows(similarity.train_kmeans_df(emb, 2, 1, cache_key=ckey))
+    assert os.path.isfile(os.path.join(spath, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(spath, "junk"))
+    assert [p for p in os.listdir(os.path.dirname(spath)) if "wip" in p] == []
+    similarity.clear_codebooks()
+    served = stores.codebook(
+        spark, ckey, ("kmeans_df", 2, 1),
+        lambda: (_ for _ in ()).throw(AssertionError("retrained")),
+    )
+    assert _rows(served) == cents
+    similarity.clear_codebooks()
 
 
 def test_fingerprint_raises_on_missing_table(tmp_path):

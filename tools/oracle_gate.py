@@ -94,7 +94,7 @@ def main() -> int:
 
     import gc
 
-    from wsprnet_scraper_spark.plans.graph_q import clear_edge_cache
+    from wsprnet_scraper_spark.operators.stores import clear_store_cache
     from wsprnet_scraper_spark.plans.registry import (
         ORACLE_BOUND,
         clear_plan_cache,
@@ -109,17 +109,19 @@ def main() -> int:
         # Per-query isolation: a ~300-query sweep in ONE default-heap
         # JVM accumulates JVM-side state until the heap tips (r5: OOM
         # at query ~261 in vanilla mode, reproducibly — the same
-        # query alone passes; r4's 291 squeaked through). Three
+        # query alone passes; r4's 291 squeaked through). Four
         # leases to release, none of which changes any query's plan
         # or confs: the registry's prepared-plan cache pins every
         # prior DataFrame's JVM plan tree (and any localCheckpoint
-        # RDDs in its lineage) via py4j refs; CacheManager holds the
-        # graph builders' persisted relations; gc.collect() runs the
-        # py4j finalizers + lets ContextCleaner reap dead checkpoint
-        # RDDs. A long-running SERVICE wants the plan cache — a
-        # 296-query sweep wants the memory.
+        # RDDs in its lineage) via py4j refs; the standing-state
+        # store's handles do the same (its parquet stays on disk and
+        # is re-opened, not rebuilt); CacheManager holds the graph
+        # builders' persisted relations; gc.collect() runs the py4j
+        # finalizers + lets ContextCleaner reap dead checkpoint RDDs.
+        # A long-running SERVICE wants the plan cache — a 296-query
+        # sweep wants the memory.
         clear_plan_cache()
-        clear_edge_cache()
+        clear_store_cache()
         spark.catalog.clearCache()
         gc.collect()
         sdf = queries[name](spark, args.sf)

@@ -202,10 +202,10 @@ LINEITEM_100X = [
 # r11 (VERDICT r10 tasks #1/#6): entries whose standing state —
 # MinHash signature store + corpus labels, trained ANN codebooks —
 # now routes through the corpus-fingerprint-keyed persistent store
-# (SPARK_GRAFT_SIG_STORE). The main loop's min-of-2 numbers measure
-# the WARM serve path (the store survives clearCache, like the graph
-# edge store); this section records the cold/warm split explicitly so
-# the standing-build share stays visible instead of silently
+# (operators/stores.py). The main loop's min-of-2 numbers measure
+# the WARM serve path (the store survives clearCache, as the graph
+# edge entries do); this section records the cold/warm split
+# explicitly so the standing-build share stays visible instead of silently
 # vanishing from the per-entry numbers.
 SIGSTORE_SPLIT = [
     "dedup_minhash_cluster_incremental",
@@ -341,20 +341,21 @@ def main() -> None:
     if out_path.is_file():  # resume: skip already-measured queries
         results = json.loads(out_path.read_text())
 
-    # The graph family reads its edge relations through the shared
-    # materialized front door (plans/graph_q.py, r6): per-query times
+    # The graph family reads its edge relations through the standing-
+    # state store (operators/stores.py): per-query times
     # below are the AMORTIZED steady state — the derivation is paid
     # once per corpus, like a 100 TB deployment's write-once edge
     # parquet. Publish that one-time build cost explicitly so the
     # amortization stays visible instead of silently vanishing from
     # every per-query number.
+    from wsprnet_scraper_spark.operators import stores as op_stores
     from wsprnet_scraper_spark.plans import graph_q
 
     def prebuild_edges(at: str) -> float:
         """Materialize ALL THREE shared edge relations (ADVICE r6:
         _copurchase_pairs was missing, so the first triangle-family
         query silently absorbed the lineitem self-join build)."""
-        graph_q.clear_edge_cache()
+        op_stores.clear_store_cache()  # handles only; files survive
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         graph_q._edges(spark, at).count()
@@ -362,14 +363,12 @@ def main() -> None:
         graph_q._copurchase_pairs(spark, at).count()
         return time.perf_counter() - t0
 
-    # r11: the standing-state store (signatures, labels, codebooks)
-    # persists across probe invocations under a probe-owned dir, the
-    # SPARK_GRAFT_EDGE_STORE discipline — per-entry numbers below are
-    # the amortized steady state; the SIGSTORE_SPLIT section records
-    # the cold build share explicitly.
-    os.environ.setdefault(
-        "SPARK_GRAFT_SIG_STORE", str(out) + "_sigstore"
-    )
+    # r11: the standing-state store (edges, signatures, labels,
+    # codebooks) persists across probe invocations under a probe-owned
+    # dir — per-entry numbers below are the amortized steady state;
+    # the SIGSTORE_SPLIT section and graph_ppr@storesplit record the
+    # cold build share explicitly.
+    os.environ.setdefault(op_stores.ENV_VAR, str(out) + "_sigstore")
 
     # Session warm-up (r8): the first timed entries of a fresh session
     # otherwise absorb one-time driver costs — first-allocation GC heap
@@ -481,14 +480,11 @@ def main() -> None:
     # tiers dropped, standing parquet intact). warm is what a
     # production ingest pays per batch; cold - warm is the
     # once-per-corpus standing-build share.
-    import shutil
-
     from wsprnet_scraper_spark.operators import similarity as op_sim
-    from wsprnet_scraper_spark.operators import stores as op_stores
     from wsprnet_scraper_spark.plans import analytics as pl_analytics
 
     def drop_memory_tiers():
-        op_stores._STORE_CACHE.clear()  # handles only; files survive
+        op_stores.clear_store_cache()  # handles only; files survive
         op_sim.clear_codebooks()
         pl_analytics._FRAME_STORE.clear()
 
@@ -497,8 +493,7 @@ def main() -> None:
         if name not in QUERIES or key in results or not want(name, key):
             continue
         run(name, args.base)  # plan-shape warm-up, untimed
-        store_dir = os.environ["SPARK_GRAFT_SIG_STORE"]
-        shutil.rmtree(store_dir, ignore_errors=True)
+        op_stores.drop_persistent()
         drop_memory_tiers()
         cold = run(name, str(out))
 
@@ -560,12 +555,12 @@ def main() -> None:
     # garbage, and the many short superstep jobs absorb the GC pauses
     # (memory trap 24). Protocol, so the COMMITTED number is the
     # defensible one: (a) a FRESH driver session for the family;
-    # (b) edge relations through the persistent store
-    # (SPARK_GRAFT_EDGE_STORE) — build cost recorded once, explicitly,
-    # with the per-query amortized share (VERDICT r8 #5); (c) one
-    # untimed representative warm-up per corpus; (d) TWO ALTERNATING
-    # passes over the whole family, per-key min — cross-run min is the
-    # judgment rule for this family.
+    # (b) edge relations through the persistent standing-state store —
+    # build cost recorded once, explicitly, with the per-query
+    # amortized share (VERDICT r8 #5); (c) one untimed representative
+    # warm-up per corpus; (d) TWO ALTERNATING passes over the whole
+    # family, per-key min — cross-run min is the judgment rule for
+    # this family.
     GPROTO = (
         "fresh-session, store-backed edges, 2 alternating passes, "
         "per-key min (iterative entries swing ~2x with driver GC; "
@@ -588,7 +583,6 @@ def main() -> None:
     )
     if gpend or want_edge_build or want_ppr_split:
         spark.stop()
-        os.environ["SPARK_GRAFT_EDGE_STORE"] = str(out) + "_edgestore"
         spark = get_session("probe-100x-graph")
         if want_edge_build:
             base_build = prebuild_edges(args.base)
@@ -613,9 +607,10 @@ def main() -> None:
                 file=sys.stderr,
             )
             out_path.write_text(json.dumps(results, indent=1) + "\n")
-        else:
-            # resume: warm the in-session handles; the store makes
-            # this a parquet re-open, not a re-derivation
+        elif gpend:
+            # resume or --only: build (or re-open) the edges UNTIMED,
+            # so the first timed @grownodes run never absorbs the
+            # edge derivation
             prebuild_edges(args.base)
             prebuild_edges(str(gout))
         run("graph_degree_dist", args.base)  # session warm-up, untimed
@@ -657,16 +652,14 @@ def main() -> None:
         # standing parquet intact). With the r12 frontier push the
         # warm serve scales with the source neighborhood, not the
         # graph.
-        import shutil as _sh
-
         if want_ppr_split:
-            estore = os.environ["SPARK_GRAFT_EDGE_STORE"]
-            _sh.rmtree(estore, ignore_errors=True)
-            graph_q.clear_edge_cache()
+            # edge entries only: the signature and codebook entries
+            # sharing the store keep their standing parquet
+            op_stores.drop_persistent("edges_")
             cold = run("graph_ppr", str(gout))
 
             def _warm_ppr() -> float:
-                graph_q._EDGE_CACHE.clear()  # handles only
+                op_stores.clear_store_cache()  # handles only
                 from wsprnet_scraper_spark.plans.registry import (
                     clear_plan_cache,
                 )

@@ -6,7 +6,7 @@ end-to-end runs (builder + noop sink) at --sf with the shared fixture
 phases bucketed by monkeypatched hooks:
 
   landing   — land_ordered_ndjson / landing-dir writes
-  seed      — stores.materialized reads + seed parquet writes
+  seed      — stores.materialized(_entry) reads + seed parquet writes
   start     — DataStreamWriter.start (source resolution + first plan)
   drain     — awaitTermination (all micro-batches)
   readback  — everything left (result read + noop execution + misc)
@@ -44,15 +44,17 @@ def install_hooks():
 
     landing.land_ordered_ndjson = timed_land
 
-    orig_mat = stores.materialized
+    def timed_store(orig):
+        def timed(*a, **k):
+            t0 = time.perf_counter()
+            r = orig(*a, **k)
+            PH["seed_store"] += time.perf_counter() - t0
+            return r
 
-    def timed_mat(*a, **k):
-        t0 = time.perf_counter()
-        r = orig_mat(*a, **k)
-        PH["seed_store"] += time.perf_counter() - t0
-        return r
+        return timed
 
-    stores.materialized = timed_mat
+    stores.materialized = timed_store(stores.materialized)
+    stores.materialized_entry = timed_store(stores.materialized_entry)
 
     orig_start = DataStreamWriter.start
 

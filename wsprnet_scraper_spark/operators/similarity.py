@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import stores
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -449,45 +451,6 @@ def _path_fingerprint(cache_key: str):
     return None
 
 
-def _codebook_store_path(cache_key, params: tuple):
-    """Persistent-tier codebook location (r10 verdict task #6): when
-    SPARK_GRAFT_SIG_STORE is set and the cache key names a real
-    corpus path, trained codebooks round-trip through
-    <store>/cbk_<keyhash>_<corpus-fingerprint>/ so a FRESH SESSION
-    serves from the standing index instead of retraining — the
-    in-memory `_CODEBOOKS` tier only ever amortized within one
-    application. Returns None (store disabled / non-path key)
-    otherwise. The fingerprint is over the embeddings parquet, so a
-    rewritten corpus keys out stale codebooks; `params` must encode
-    k/iters/etc. The store is a cache: parquet round-trips the exact
-    (cid, cv, cn2) values, so serving and dedup plans are
-    bit-identical either way (pinned by tests/test_sig_store.py)."""
-    import hashlib
-    import os
-
-    store = os.environ.get("SPARK_GRAFT_SIG_STORE")
-    if store is None or cache_key is None:
-        return None
-    base = str(cache_key).split("#", 1)[0]
-    corpus_dir = base if os.path.isdir(base) else base.rsplit(":", 1)[0]
-    if not os.path.isdir(corpus_dir):
-        return None
-    from .stores import corpus_fingerprint
-
-    try:
-        fp = corpus_fingerprint(corpus_dir, ("embeddings",))
-    except FileNotFoundError:
-        # ADVICE r11: a resolvable dir without an embeddings table
-        # (custom fixtures train on in-memory frames) must mean "no
-        # persistent tier", not a crash — the trainer falls back to
-        # in-run training exactly as it does with the env var unset.
-        return None
-    h = hashlib.sha1(
-        "|".join([str(cache_key)] + [str(p) for p in params]).encode()
-    ).hexdigest()[:12]
-    return os.path.join(store, f"cbk_{h}_{fp}")
-
-
 def _lit_double_array(xs: list[float]):
     # one parsed expression instead of 1 + len(xs) py4j literal
     # calls: repr(float) round-trips exactly through Spark's
@@ -793,15 +756,21 @@ def train_kmeans_df(
         if ck in _CODEBOOKS:
             return _CODEBOOKS[ck]
 
-    import os
+    cents = stores.codebook(
+        emb.sparkSession,
+        cache_key,
+        ("kmeans_df", num_centroids, iters),
+        lambda: _train_kmeans_df(emb, num_centroids, iters),
+    )
+    if ck:
+        _CODEBOOKS[ck] = cents
+    return cents
 
-    spath = _codebook_store_path(cache_key, ("kmeans_df", num_centroids, iters))
-    if spath is not None and os.path.isfile(os.path.join(spath, "_SUCCESS")):
-        cents = emb.sparkSession.read.parquet(spath).localCheckpoint(eager=True)
-        if ck:
-            _CODEBOOKS[ck] = cents
-        return cents
 
+def _train_kmeans_df(
+    emb: DataFrame, num_centroids: int, iters: int
+) -> DataFrame:
+    """train_kmeans_df's Lloyd iterations, with no cache tier."""
     vq = F.transform(
         _as_double(F.col("embedding")),
         lambda x: F.floor(x * 1000).cast("long").cast("double"),
@@ -844,11 +813,6 @@ def train_kmeans_df(
             .localCheckpoint(eager=True)
         )
 
-    if spath is not None:
-        os.makedirs(os.path.dirname(spath), exist_ok=True)
-        cents.write.mode("overwrite").parquet(spath)
-    if ck:
-        _CODEBOOKS[ck] = cents
     return cents
 
 
@@ -1375,25 +1339,30 @@ def train_twolevel_df(
         if ck in _CODEBOOKS:
             return _CODEBOOKS[ck]
 
-    import os
-
-    spath = _codebook_store_path(
-        cache_key, ("twolevel_df", k_coarse, k_fine, iters, init_pool)
+    out = stores.codebook(
+        emb.sparkSession,
+        cache_key,
+        ("twolevel_df", k_coarse, k_fine, iters, init_pool),
+        lambda: _train_twolevel_df(
+            emb, k_coarse, k_fine, iters, cache_key, init_pool
+        ),
+        parts=("coarse", "fine"),
     )
-    if (
-        spath is not None
-        and os.path.isfile(os.path.join(spath, "coarse", "_SUCCESS"))
-        and os.path.isfile(os.path.join(spath, "fine", "_SUCCESS"))
-    ):
-        rd = emb.sparkSession.read
-        out = (
-            rd.parquet(os.path.join(spath, "coarse")).localCheckpoint(eager=True),
-            rd.parquet(os.path.join(spath, "fine")).localCheckpoint(eager=True),
-        )
-        if ck:
-            _CODEBOOKS[ck] = out
-        return out
+    if ck:
+        _CODEBOOKS[ck] = out
+    return out
 
+
+def _train_twolevel_df(
+    emb: DataFrame,
+    k_coarse: int,
+    k_fine: int,
+    iters: int,
+    cache_key: str | None,
+    init_pool: int,
+) -> tuple[DataFrame, DataFrame]:
+    """train_twolevel_df's training, with no cache tier of its own
+    (the coarse codebook still goes through train_kmeans_df's)."""
     from pyspark.sql import Window
 
     coarse = train_kmeans_df(
@@ -1487,13 +1456,7 @@ def train_twolevel_df(
         )
 
     routed.unpersist()
-    out = (coarse, fine)
-    if spath is not None:
-        coarse.write.mode("overwrite").parquet(os.path.join(spath, "coarse"))
-        fine.write.mode("overwrite").parquet(os.path.join(spath, "fine"))
-    if ck:
-        _CODEBOOKS[ck] = out
-    return out
+    return coarse, fine
 
 
 def _twolevel_pairs_gemm(base: DataFrame, threshold: float) -> DataFrame:

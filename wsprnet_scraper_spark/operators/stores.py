@@ -1,35 +1,39 @@
-"""Corpus-fingerprint-keyed standing-state store (VERDICT r10 #1/#6).
+"""Corpus-fingerprint-keyed standing-state store.
 
-Generalizes the graph family's write-once edge parquet
-(plans/graph_q.py `_materialized_edges`, the SPARK_GRAFT_EDGE_STORE
-precedent) to ANY standing relation a production deployment builds
-once per corpus and every later run scans: MinHash signature stores,
-standing-corpus cluster labels, trained ANN codebooks. At 100 TB this
-IS the deployment shape — the judged incremental/stream entries used
-to rebuild the standing corpus state per run (10.3 s of
-strm_minhash_dedup's 18.7 s at the 100x probe was the signature-store
-rebuild), where a real pipeline pays that once per corpus version and
-amortizes it across every ingest batch.
+Every standing relation the engine builds once per corpus version and
+scans on every later run lives here: the graph family's derived edge
+relations, MinHash signature stores, standing-corpus cluster labels
+and trained ANN codebooks. At 100 TB this IS the deployment shape — a
+real pipeline pays each derivation once per corpus version and
+amortizes it across every query and ingest batch (10.3 s of
+strm_minhash_dedup's 18.7 s at the 100x probe was a per-run
+signature-store rebuild; the full edge derivation was 37.9 s). This
+module is the only one that reads the store root or writes into it.
 
-Two tiers, exactly the edge-store contract:
+Write-once parquet, not persist/localCheckpoint, deliberately:
+CacheManager matches persisted relations by canonicalized plan, which
+silently serves SUBTREES of other queries (exactly what the cache-free
+probe discipline clears before every timed run), and an in-heap
+checkpoint of a 100x-probe edge relation (117M rows) pins gigabytes
+of block-manager memory for the whole session — measured OOM against
+the 8g driver. Columnar-on-disk costs one write and gives every reader
+a pruned, parallel, page-cache-warm scan while the heap stays free.
+
+Two tiers, both fingerprint-keyed and _SUCCESS-gated:
 
 - default: per-application scratch root (process-private tempdir),
-  fingerprint-keyed and _SUCCESS-gated exactly like the persistent
-  tier, deleted at process exit (safe under concurrent applications
-  — no shared paths). Steady-state runs in one session serve from
-  the standing parquet; the first call pays the build. r12: a
-  maintenance pass (`clear_store_cache()`) drops only the in-memory
-  HANDLES — the standing parquet survives, so a daemon's periodic
-  reclaim costs a parquet re-open, not a standing-state rebuild
-  (VERDICT r11 task #5; the probe's cold-minus-warm split measures
-  exactly the rebuild this avoids).
-- SPARK_GRAFT_SIG_STORE=<dir> (opt-in): the relation persists ACROSS
+  deleted at process exit (safe under concurrent applications — no
+  shared paths). A maintenance pass (`clear_store_cache()`) drops only
+  the in-memory HANDLES — the standing parquet survives, so a daemon's
+  periodic reclaim costs a parquet re-open, not a standing-state
+  rebuild (the probe's cold-minus-warm split measures exactly the
+  rebuild this avoids).
+- SPARK_GRAFT_SIG_STORE=<dir> (opt-in): relations persist ACROSS
   sessions under <dir>/<kind>_<corpus-fingerprint>/ — a fresh session
   reuses the standing parquet instead of re-paying the derivation.
   The fingerprint (file stats of the named source tables) keys out
-  stale data; _SUCCESS gates out partial writes. Opt-in because a
-  shared path under concurrent applications could race — the
-  probe/bench tooling owns its store dir.
+  stale data; builds land in a private temp dir and are renamed into
+  place, so concurrent sessions never see or clobber a partial write.
 
 The store is a CACHE, never a semantic change: a stored relation must
 be bit-identical to `build()`'s output (parquet round-trips the exact
@@ -86,37 +90,64 @@ def corpus_fingerprint(sf_dir: str, tables=("documents",)) -> str:
 _SCRATCH_ROOTS: dict = {}
 
 
+def _forget_handles() -> None:
+    """Drop every handle AND the registry plan cache (ADVICE r6):
+    cached plans hold DataFrames that scan store files, so deleting
+    files without dropping those plans would leave the plan cache
+    serving FileNotFoundException time bombs."""
+    from ..plans.registry import clear_plan_cache
+
+    _STORE_CACHE.clear()
+    clear_plan_cache()
+
+
 def clear_store_cache(drop_files: bool = False) -> None:
     """Drop all in-memory handles. Scratch-tier PARQUET survives by
-    default (r12, VERDICT r11 task #5): the daemon's
-    session_maintenance calls this to reclaim JVM leases — plan
-    trees, cached relations — and the standing parquet on local disk
-    pins no JVM memory at all, so deleting it would convert every
-    post-maintenance store access into a full standing-state REBUILD
-    where a parquet re-open suffices (measured: the probe's
-    cold-minus-warm split IS that rebuild cost — e.g. 18.8 s of
-    dedup_minhash_cluster_incremental's 28.0 s cold at 100×).
-    `drop_files=True` deletes the scratch dirs too (tests / explicit
-    disk reclamation); process exit always cleans up via atexit."""
+    default: the daemon's session_maintenance calls this to reclaim
+    JVM leases — plan trees, cached relations — and the standing
+    parquet on local disk pins no JVM memory at all, so deleting it
+    would convert every post-maintenance store access into a full
+    standing-state REBUILD where a parquet re-open suffices (e.g.
+    18.8 s of dedup_minhash_cluster_incremental's 28.0 s cold at
+    100×). `drop_files=True` deletes the scratch dirs too (tests /
+    explicit disk reclamation) and the cached plans that scan them;
+    process exit always cleans up via atexit."""
     _STORE_CACHE.clear()
     if drop_files:
         for root in _SCRATCH_ROOTS.values():
             shutil.rmtree(root, ignore_errors=True)
         _SCRATCH_ROOTS.clear()
+        _forget_handles()
 
 
-def _land(store_root: str, kind: str, path: str, build) -> None:
-    """Build into a unique temp subdir of `store_root` and atomically
-    rename into `path` (ADVICE r11: check-then-write was a TOCTOU —
-    two sessions sharing the persistent store could interleave
-    overwrite-deletes with writes on the same path). A rename
-    collision means another writer finished the same fingerprint
-    first; their relation is bit-identical by construction, so ours
-    is discarded."""
+def drop_persistent(prefix: str = "") -> None:
+    """Delete the persistent-tier entries whose name starts with
+    `prefix` (all of them by default) — the "new corpus version" state
+    a cold measurement starts from — and drop every handle and cached
+    plan that could still scan them."""
+    store = os.environ.get(ENV_VAR)
+    if store and os.path.isdir(store):
+        for name in os.listdir(store):
+            if name.startswith(prefix):
+                shutil.rmtree(os.path.join(store, name), ignore_errors=True)
+    _forget_handles()
+
+
+def _land(store_root: str, kind: str, path: str, write) -> None:
+    """Run `write(tmp)` into a unique temp subdir of `store_root` and
+    atomically rename it into `path` (ADVICE r11: check-then-write was
+    a TOCTOU — two sessions sharing the persistent store could
+    interleave overwrite-deletes with writes on the same path). A
+    rename collision means another writer finished the same
+    fingerprint first; their relation is bit-identical by
+    construction, so ours is discarded. `write` may land several
+    relations in subdirs of tmp; the top-level _SUCCESS marks the
+    whole entry complete."""
     os.makedirs(store_root, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=f".{kind}_wip_", dir=store_root)
     try:
-        build().write.mode("overwrite").parquet(tmp)
+        write(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "a").close()
     except BaseException:
         # ADVICE r12: a failed build must not leak its wip dir into a
         # shared persistent store (atexit only covers scratch roots).
@@ -157,22 +188,9 @@ def _scratch_root(app: str) -> str:
     return root
 
 
-def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
-    """Serve the standing relation `kind` for the corpus at sf_dir:
-    from the per-application handle if already open, else from the
-    persistent store (ENV_VAR) or the scratch tier, building with
-    `build()` (a zero-arg callable returning a DataFrame) only when
-    no standing parquet exists. `kind` must encode every parameter
-    the relation depends on (shingle n, hash count, batch predicate,
-    codebook k/iters, ...) — two configurations must never share a
-    path.
-
-    Both tiers are fingerprint-keyed and _SUCCESS-gated (r12): the
-    scratch tier lives under a process-private root, so a daemon's
-    periodic session_maintenance (clear_store_cache) drops only the
-    HANDLES — the next access re-opens the standing parquet instead
-    of re-paying the build (tests/test_advice_r12.py pins build()
-    called once across a maintenance cycle)."""
+def _serve(spark, sf_dir: str, kind: str, build, tables):
+    """(df, parquet_path) of the standing relation; the one place
+    that knows the handle-cache key."""
     app = spark.sparkContext.applicationId
     bucket = _STORE_CACHE.get(app)
     if bucket is None:
@@ -193,7 +211,7 @@ def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
             # fail — a constant key would serve stale state across
             # corpus rewrites — but the scratch tier is
             # process-private, so fall back to an unkeyed one-shot
-            # build (the pre-r12 behavior for exactly this case).
+            # build.
             if persistent:
                 raise
             fp = None
@@ -203,10 +221,31 @@ def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
         else:
             path = os.path.join(root, f"{kind}_{fp}")
             if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-                _land(root, kind, path, build)
+                _land(
+                    root, kind, path,
+                    lambda tmp: build().write.mode("overwrite").parquet(tmp),
+                )
         ent = (spark.read.parquet(path), path, persistent)
         bucket[key] = ent
-    return ent[0]
+    return ent[0], ent[1]
+
+
+def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
+    """Serve the standing relation `kind` for the corpus at sf_dir:
+    from the per-application handle if already open, else from the
+    persistent store (ENV_VAR) or the scratch tier, building with
+    `build()` (a zero-arg callable returning a DataFrame) only when
+    no standing parquet exists. `kind` must encode every parameter
+    the relation depends on (shingle n, hash count, batch predicate,
+    codebook k/iters, ...) and carry a family prefix ("edges_",
+    "gccinc_", ...) — two configurations must never share a path.
+    `tables` names the source tables the fingerprint covers.
+
+    A maintenance clear drops only the handles, so the next access
+    re-opens the standing parquet instead of re-paying the build
+    (tests/test_advice_r12.py pins build() called once across a
+    maintenance cycle)."""
+    return _serve(spark, sf_dir, kind, build, tables)[0]
 
 
 def materialized_entry(
@@ -217,7 +256,63 @@ def materialized_entry(
     the stream twins used to copy the corpus seed into the sink every
     invocation) still size partitions from the standing volume
     (_sized_stream_parts reads file sizes, not DataFrames)."""
-    materialized(spark, sf_dir, kind, build, tables)
-    app = spark.sparkContext.applicationId
-    ent = _STORE_CACHE[app][(kind, sf_dir.rstrip("/"))]
-    return ent[0], ent[1]
+    return _serve(spark, sf_dir, kind, build, tables)
+
+
+def codebook_path(cache_key, params: tuple):
+    """Persistent-tier codebook location: when ENV_VAR is set and the
+    cache key names a real corpus path, trained codebooks round-trip
+    through <store>/cbk_<keyhash>_<corpus-fingerprint>/ so a FRESH
+    SESSION serves from the standing index instead of retraining.
+    Returns None (store disabled / non-path key / corpus without an
+    embeddings table) otherwise. The fingerprint is over the
+    embeddings parquet, so a rewritten corpus keys out stale
+    codebooks; `params` must encode k/iters/etc."""
+    store = os.environ.get(ENV_VAR)
+    if store is None or cache_key is None:
+        return None
+    base = str(cache_key).split("#", 1)[0]
+    corpus_dir = base if os.path.isdir(base) else base.rsplit(":", 1)[0]
+    if not os.path.isdir(corpus_dir):
+        return None
+    try:
+        fp = corpus_fingerprint(corpus_dir, ("embeddings",))
+    except FileNotFoundError:
+        # ADVICE r11: a resolvable dir without an embeddings table
+        # (custom fixtures train on in-memory frames) must mean "no
+        # persistent tier", not a crash — the trainer falls back to
+        # in-run training exactly as it does with the env var unset.
+        return None
+    h = hashlib.sha1(
+        "|".join([str(cache_key)] + [str(p) for p in params]).encode()
+    ).hexdigest()[:12]
+    return os.path.join(store, f"cbk_{h}_{fp}")
+
+
+def codebook(spark, cache_key, params: tuple, train, parts=None):
+    """Serve trained codebook relation(s) from the persistent tier, or
+    call `train()` and land its output there. `train()` returns one
+    DataFrame, or — with `parts` naming subdirs — one per part, all
+    landed in ONE temp dir and renamed together so a reader never sees
+    half an index. Store-served relations are localCheckpoint-ed like
+    the trainers' outputs; without a codebook_path this is `train()`.
+    The parquet round-trips the exact (cid, cv, cn2) values, so
+    serving is bit-identical either way (tests/test_sig_store.py)."""
+    names = parts or ("",)
+    path = codebook_path(cache_key, params)
+    if path is not None and os.path.isfile(os.path.join(path, "_SUCCESS")):
+        dfs = tuple(
+            spark.read.parquet(os.path.join(path, p)).localCheckpoint(eager=True)
+            for p in names
+        )
+        return dfs if parts else dfs[0]
+    out = train()
+    if path is not None:
+        dfs = out if parts else (out,)
+
+        def write(tmp):
+            for p, df in zip(names, dfs):
+                df.write.mode("overwrite").parquet(os.path.join(tmp, p))
+
+        _land(os.path.dirname(path), "cbk", path, write)
+    return out

@@ -452,7 +452,7 @@ def dedup_minhash_cluster_incremental(spark, sf_dir):
     signature relation + cluster labels — is served through the
     corpus-fingerprint-keyed store (operators/stores.py, r10 verdict
     task #1): built once per corpus version (scratch tier in-app;
-    SPARK_GRAFT_SIG_STORE persists it across sessions), so
+    the persistent tier keeps it across sessions), so
     steady-state runs pay ONLY the batch-side work — the production
     ingest shape. The store is a cache: output bit-identical to the
     in-run recompute (pinned by tests/test_sig_store.py), sharing

@@ -124,23 +124,21 @@ class _rocksdb_state:
     streaming run (conf read at query START; set before .start(),
     restored after awaitTermination).
 
-    Why (r12 for strm_dedup_watermark; r14 extended to the
-    stream-stream joins): the HDFS-backed default holds every state
-    row in JVM HEAP — at the 100x probe corpus the symmetric-join
-    state (~4M rows across 4 stores/partition) OOM'd the 8g driver
-    JVM outright, exactly the failure mode the r12 watermark probe
-    hit. RocksDB keeps state in native memory + local disk (the
-    configuration a 100 TB streaming deployment actually runs), and
-    changelog checkpointing commits per-batch DELTAS instead of full
-    snapshots (commit 123 -> ~38 ms measured on the watermark entry;
-    snapshots move to the async maintenance thread).
+    Used by strm_dedup_watermark only (r12). Why: the HDFS-backed
+    default holds every state row in JVM HEAP, which OOM'd the 8g
+    driver JVM at the watermark probe. RocksDB keeps state in native
+    memory + local disk (the configuration a 100 TB streaming
+    deployment actually runs), and changelog checkpointing commits
+    per-batch DELTAS instead of full snapshots (commit 123 -> ~38 ms
+    measured on the watermark entry; snapshots move to the async
+    maintenance thread).
 
-    NOT extended to the stream-stream joins (r14, measured at the
-    100x probe corpus): the symmetric join's per-row state write/probe
-    pattern runs ~3x slower on RocksDB (306 s vs 110 s heap-backed at
-    46 state partitions) and +2.5 s per entry even at sf0.1 — the
-    dedup map's lookup pattern is where RocksDB wins; the joins keep
-    the heap provider with byte-sized partitions."""
+    The stream-stream joins keep the heap provider (r14, measured at
+    the 100x probe corpus): the symmetric join's per-row state
+    write/probe pattern runs ~3x slower on RocksDB (306 s vs 110 s
+    heap-backed at 46 state partitions) and +2.5 s per entry even at
+    sf0.1 — the dedup map's lookup pattern is where RocksDB wins; the
+    joins size their heap state with byte-sized partitions."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -421,8 +419,7 @@ def strm_dedup_watermark(spark, sf_dir):
     prev_work = _WM_WORK
     work = tempfile.mkdtemp(prefix="wspr_dedup_wm_")
     _WM_WORK = work
-    # RocksDB provider + changelog checkpointing (r14: extracted to
-    # _rocksdb_state, shared with the stream-stream joins); state
+    # RocksDB provider + changelog checkpointing (_rocksdb_state); state
     # partitions sized to the (doubled) input volume — each RocksDB
     # instance costs native-db setup + per-commit work, so instance
     # count should track state bytes, not local cores

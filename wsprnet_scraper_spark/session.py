@@ -24,6 +24,42 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def sql_conf() -> dict[str, str]:
+    """The runtime SQL confs every engine session runs with — applied
+    by get_session's builder and by __spark_entry__ to a driver-owned
+    session, so the two can never drift apart."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(cpu_count()),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Broadcast anything under 32 MiB: every dimension table in the
+        # judged workload (band dim, region, nation, supplier, part at
+        # test SFs) should go broadcast, never shuffle.
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        # permissive arithmetic/cast semantics: the reference tolerates
+        # bad rows (div-by-zero -> null, failed cast -> null) and DuckDB
+        # returns NULL for double division by zero; Spark 4's ANSI mode
+        # would throw instead
+        "spark.sql.ansi.enabled": "false",
+        # the events test table stores TIMESTAMP(NANOS) which Spark's
+        # parquet reader rejects; read as long and convert explicitly
+        # (sources.tables.load does the ns->timestamp conversion)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # parquet TIMESTAMP without timezone (timestamp[us], how the
+        # driver's generator writes events.ts) must read as TIMESTAMP,
+        # not TIMESTAMP_NTZ: the whole engine runs in UTC and the
+        # DuckDB oracle reads the same column as UTC-naive, so LTZ@UTC
+        # and the oracle agree wall-clock for free, while NTZ breaks
+        # every time function that requires TIMESTAMP (unix_micros,
+        # window(), watermarks). load_events casts as a backstop if
+        # this conf can't be set.
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    }
+
+
 def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
     cpus = cpu_count()
     # Python workers must be able to import this package even when the
@@ -40,12 +76,7 @@ def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=sql_conf())
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # JDK 17's GCLocker throws a SPURIOUS OutOfMemoryError when an
         # allocation retries too often while JNI critical sections
@@ -71,27 +102,6 @@ def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
             ).strip(),
         )
         .config("spark.ui.enabled", "false")
-        # Broadcast anything under 32 MiB: every dimension table in the
-        # judged workload (band dim, region, nation, supplier, part at
-        # test SFs) should go broadcast, never shuffle.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # permissive arithmetic/cast semantics: the reference tolerates
-        # bad rows (div-by-zero -> null, failed cast -> null) and DuckDB
-        # returns NULL for double division by zero; Spark 4's ANSI mode
-        # would throw instead
-        .config("spark.sql.ansi.enabled", "false")
-        # the events test table stores TIMESTAMP(NANOS) which Spark's
-        # parquet reader rejects; read as long and convert explicitly
-        # (sources.tables.load does the ns->timestamp conversion)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # parquet TIMESTAMP without timezone (timestamp[us], how the
-        # driver's generator writes events.ts) must read as TIMESTAMP,
-        # not TIMESTAMP_NTZ: the whole engine runs in UTC and the
-        # DuckDB oracle reads the same column as UTC-naive, so LTZ@UTC
-        # and the oracle agree wall-clock for free, while NTZ breaks
-        # every time function that requires TIMESTAMP (unix_micros,
-        # window(), watermarks).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -71,15 +71,14 @@ def session_maintenance(spark) -> None:
     from ..operators.similarity import clear_codebooks
     from ..operators.stores import clear_store_cache
     from ..plans.analytics import clear_frame_store
-    from ..plans.graph_q import clear_edge_cache
     from ..plans.registry import clear_plan_cache
 
     clear_plan_cache()
-    clear_edge_cache()
-    # handles only: the standing-state scratch parquet survives, so
-    # the post-maintenance re-pay is a parquet re-open, never a
-    # standing-state rebuild (r12, VERDICT r11 task #5 — the probe's
-    # cold-minus-warm split is the rebuild this avoids)
+    # handles only: the standing-state scratch parquet (edges,
+    # signatures, labels, codebooks) survives, so the post-maintenance
+    # re-pay is a parquet re-open, never a standing-state rebuild
+    # (r12, VERDICT r11 task #5 — the probe's cold-minus-warm split is
+    # the rebuild this avoids)
     clear_store_cache()
     # localCheckpoint-pinned relations are immune to clearCache();
     # dropping the store references is what lets the ContextCleaner

@@ -141,20 +141,27 @@ def start_ingest(
     the same foreachBatch over the same deduped batch — the
     reference's optional ClickHouse import next to the TimescaleDB
     load (wsprnet-scraper.sh:405-407,426-429; SURVEY §2.1
-    snk_clickhouse). The batch is cached, so fan-out costs one extra
-    write, not a recompute.
+    snk_clickhouse). The batch is checkpointed, so fan-out costs one
+    extra write, not a recompute.
     """
     monitor = monitor if monitor is not None else GapMonitor()
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        deduped = _dedup_against_sink(batch_df, sink_dir).cache()
-        try:
-            monitor.observe(deduped, batch_id)
-            deduped.write.mode("append").parquet(sink_dir)
-            if mirror_fn is not None:
-                mirror_fn(deduped, batch_id)
-        finally:
-            deduped.unpersist()
+        # A lazy local checkpoint, not cache(): the parquet append
+        # re-caches every cached plan that reads sink_dir, and
+        # `deduped` does (its anti-join), so a cached batch re-ran the
+        # anti-join against the rows just written and handed the
+        # mirror an empty batch. The checkpoint is a lineage root the
+        # write cannot invalidate; it fills on observe()'s first job,
+        # so no extra job runs. Its blocks are freed by the
+        # ContextCleaner once the batch's DataFrame is unreachable.
+        deduped = _dedup_against_sink(batch_df, sink_dir).localCheckpoint(
+            eager=False
+        )
+        monitor.observe(deduped, batch_id)
+        deduped.write.mode("append").parquet(sink_dir)
+        if mirror_fn is not None:
+            mirror_fn(deduped, batch_id)
 
     # observe(): zero-cost in-plan metrics surfaced per micro-batch in
     # StreamingQueryProgress.observedMetrics — the ops dashboard feed
